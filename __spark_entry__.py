@@ -5744,10 +5744,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     carry the evidence.  Every window query is pre-verified on a
     PLAIN local[32] session (driver conditions: ANSI on, no engine
     confs) against the DuckDB oracle at sf0.01
-    (``tools/preverify_r14_band.log``).  The r13 window list stays
-    below as ``_R13_WINDOW`` for the ledger's history."""
+    (``tools/preverify_r14_band.log``)."""
     out = {
-        # ===== r09 grouping (historical; see _R13_WINDOW below) =====
+        # ===== r09 grouping (historical) =====
         # part A: never driver-checked — the two persistence
         # roundtrips added after the r8 window was spent, plus the
         # six queries NEW this round (Gopher/C4 quality rules,
@@ -6071,68 +6070,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {k: out[k] for k in _R14_WINDOW} | {
         k: v for k, v in out.items() if k not in window
     }
-
-
-#: r13 driver-check band (VERDICT r12 #1): (A) the 4 r12-tail
-#: registrations with no driver row; (B) the 46 oldest oracle-stale
-#: fills (r7/r8 evidence, ledger order).  Entire band pre-verified at
-#: r12 close on a plain ANSI local[32] session at sf0.01
-#: (tools/preverify_r13_band.log, 50/50).  Rows-only dials stay out
-#: per VERDICT r9/r10.
-_R13_WINDOW = [
-    # A: r12-tail additions, no driver evidence yet
-    "cap_per_source_windowed",
-    "cap_per_source_skew",
-    "paragraph_registry",
-    "paragraph_dedup_incremental",
-    # B: the 46 oldest oracle-stale fills (r7/r8 ledger order)
-    "winnowing_fingerprints",
-    "embedding_norms",
-    "knn_bruteforce",
-    "knn_label_accuracy",
-    "hash_sample",
-    "weighted_sample",
-    "chunk_documents",
-    "pack_sequences",
-    "media_features",
-    "media_frame_sample",
-    "higher_order_funcs",
-    "csv_roundtrip",
-    "clustered_roundtrip",
-    "schema_evolution",
-    "value_outliers",
-    "cohort_retention",
-    "funnel_conversion",
-    "fuzzy_vocab",
-    "session_conversion",
-    "zorder_key",
-    "scd2_intervals",
-    "upsert_latest_wins",
-    "profile_table",
-    "enrich_documents",
-    "enrich_video_titles",
-    "mixture_plan",
-    "mg_heavy_hitters_by_key",
-    "python_datasource_sink",
-    "rest_ingest_videos",
-    "rest_ingest_comments",
-    "cms_heavy_hitters",
-    "mg_heavy_hitters",
-    "dq_report",
-    "zipf_fit",
-    "length_drift",
-    "dq_referential_orphans",
-    "dq_unique_violations",
-    "table_fingerprint",
-    "snapshot_diff",
-    "volume_shipping",
-    "small_quantity_revenue",
-    "disjunctive_revenue",
-    "promo_part_suppliers",
-    "sql_api_top_orders",
-    "udtf_sentences",
-    "incremental_agg",
-]
 
 
 #: r14 driver-check band (optimization round 2): (A) the 5 r13-tail

@@ -39,11 +39,19 @@ def test_iso_duration_cases(spark):
         None: None,
         "PT": None,  # matches grammar but carries no components
         "1H30M": None,  # missing P prefix
+        "PT5S\n": None,  # Java's $ would accept a trailing newline
+        "P99999999999999999999W": None,  # past the long range
     }
-    out = _eval(
-        spark, iso8601_duration_seconds(F.col("x")), list(cases.keys())
-    )
-    assert out == list(cases.values())
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            out = _eval(
+                spark, iso8601_duration_seconds(F.col("x")), list(cases.keys())
+            )
+            assert out == list(cases.values()), ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_word_and_token_counts(spark):

@@ -7,6 +7,8 @@ real kernels and the Spark-side contract: schemas, batching,
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from youtube_podcast_data_pipeline_azure_spark import schemas
 from youtube_podcast_data_pipeline_azure_spark.operators import multimodal
@@ -121,6 +123,22 @@ def test_ahash_kernel_exact(spark):
     assert out[1].n_cells == 16
 
 
+def _ahash_by_block_loop(arr, grid: int) -> int:
+    """Direct Python replay of the aHash integer rule, one block at a
+    time (an empty block sums to 0 and never exceeds the mean)."""
+    h, w, _ = arr.shape
+    lum = arr.astype(int).sum(axis=2)
+    total, n_pix, sig = int(lum.sum()), h * w, 0
+    for gy in range(grid):
+        y0, y1 = gy * h // grid, (gy + 1) * h // grid
+        for gx in range(grid):
+            x0, x1 = gx * w // grid, (gx + 1) * w // grid
+            blk = int(lum[y0:y1, x0:x1].sum())
+            if blk * n_pix > total * (y1 - y0) * (x1 - x0):
+                sig |= 1 << (gy * grid + gx)
+    return sig
+
+
 def test_ahash_block_downsample_unequal_cells(spark):
     """5×5 image hashed on a 4×4 grid exercises the unequal-block
     cross-multiplied compare; result must equal a direct Python replay
@@ -129,20 +147,39 @@ def test_ahash_block_downsample_unequal_cells(spark):
 
     rng_bytes = bytes((i * 37 + 11) % 256 for i in range(5 * 5 * 3))
     arr = np.frombuffer(rng_bytes, dtype=np.uint8).reshape(5, 5, 3)
-    lum = arr.astype(int).sum(axis=2)
-    total, n_pix = int(lum.sum()), 25
-    expected = 0
-    for gy in range(4):
-        y0, y1 = gy * 5 // 4, (gy + 1) * 5 // 4
-        for gx in range(4):
-            x0, x1 = gx * 5 // 4, (gx + 1) * 5 // 4
-            blk = int(lum[y0:y1, x0:x1].sum())
-            if blk * n_pix > total * (y1 - y0) * (x1 - x0):
-                expected |= 1 << (gy * 4 + gx)
     rows = [(9, "image", "image/raw-rgb", rng_bytes, 5, 5, None, "d")]
     assets = spark.createDataFrame(rows, schemas.MEDIA_ASSETS)
     out = multimodal.ahash_images(assets).collect()[0]
-    assert out.ahash == expected
+    assert out.ahash == _ahash_by_block_loop(arr, 4)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    grid=st.sampled_from([4, 5, 7]),
+    images=st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=3),  # the side below the grid
+            st.integers(min_value=1, max_value=12),  # the other side
+            st.booleans(),  # which side is short
+            st.integers(min_value=0, max_value=2**32 - 1),  # pixel seed
+        ),
+        min_size=1, max_size=6,
+    ),
+)
+def test_ahash_smaller_than_grid_equals_block_loop(spark, grid, images):
+    """Images with ``h`` or ``w`` below the grid leave some blocks
+    without pixels; their bits must stay clear, as in the block loop."""
+    import numpy as np
+
+    rows, want = [], {}
+    for i, (short, other, tall, seed) in enumerate(images):
+        h, w = (other, short) if tall else (short, other)
+        arr = np.random.default_rng(seed).integers(0, 256, (h, w, 3), dtype=np.uint8)
+        rows.append((i, "image", "x", arr.tobytes(), w, h, None, "d"))
+        want[i] = _ahash_by_block_loop(arr, grid)
+    df = spark.createDataFrame(rows, schemas.MEDIA_ASSETS)
+    got = {r.asset_id: r.ahash for r in multimodal.ahash_images(df, grid=grid).collect()}
+    assert got == want
 
 
 def test_image_near_dup_pairs_lossless(spark):

@@ -1110,3 +1110,30 @@ def test_corpus_diff_exchanges_carry_fingerprints_not_text(spark, sf_dir):
         ]
         assert exchanges, name
         assert all("text" not in ln for ln in exchanges), (name, exchanges)
+
+
+def test_video_silver_edge_spreads_single_split_bronze_only(spark, sf_dir):
+    """The video path takes its parallelism at the silver edge: a
+    single-split bronze is round-robined to defaultParallelism (one
+    round-robin exchange, no hash exchange), an already multi-split
+    bronze passes through with no exchange added, and comments stay
+    exchange-free."""
+    from youtube_podcast_data_pipeline_azure_spark.operators import medallion
+
+    target = spark.sparkContext.defaultParallelism
+    bronze = entry._bronze_videos_from_orders(spark, sf_dir)
+    assert bronze.rdd.getNumPartitions() == 1  # the single-split fixture
+
+    silver = entry.queries()["videos_bronze_to_silver"](spark, sf_dir)
+    plan = silver._jdf.queryExecution().executedPlan().toString()
+    assert silver.rdd.getNumPartitions() >= target
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    assert plan.count("Exchange hashpartitioning") == 0, plan
+
+    # a hash layout upstream is kept as is: its exchange is the only one
+    wide = medallion.bronze_videos_to_silver(bronze.repartition(max(2, target), "id"))
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+
+    assert "Exchange" not in _plan(spark, sf_dir, "comments_bronze_to_silver")

@@ -4,6 +4,7 @@ references for the operators with the subtlest invariants."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -511,8 +512,6 @@ def test_hamming_pairs_lossless_on_arbitrary_signatures(spark, sigs, max_h):
 def test_strip_markup_recovers_plain_text_from_tag_wrapping(spark, words):
     """Wrapping entity-free plain text in arbitrary tags and stripping
     must recover the whitespace-collapsed text."""
-    import re
-
     from youtube_podcast_data_pipeline_azure_spark.functions.text import strip_markup
 
     plain = " ".join(words)
@@ -544,3 +543,86 @@ def test_ahash_amplitude_invariance(spark, pixels):
     df = spark.createDataFrame(rows, schemas.MEDIA_ASSETS)
     out = {r.asset_id: r.ahash for r in ahash_images(df, grid=4).collect()}
     assert out[1] == out[2]
+
+
+_ISO_REFERENCE = re.compile(
+    r"P(?:(\d+)W)?(?:(\d+)D)?(?:T(?:(\d+)H)?(?:(\d+)M)?(?:(\d+(?:\.\d+)?)S)?)?",
+    re.ASCII,
+)
+
+
+def _iso_seconds_reference(s):
+    """Pure-Python twin of ``iso8601_duration_seconds``: the same
+    grammar by ``re.fullmatch``, the same double arithmetic, then
+    Spark's double -> long ``try_cast`` (truncate; null past 2^63, and
+    exactly 2^63 saturates)."""
+    m = None if s is None else _ISO_REFERENCE.fullmatch(s)
+    if m is None or not any(m.groups()):
+        return None
+    w, d, h, mi, sec = (float(g) if g else 0.0 for g in m.groups())
+    total = w * 604800 + d * 86400 + h * 3600 + mi * 60 + sec
+    if total > 2**63:
+        return None
+    return min(int(total), 2**63 - 1)
+
+
+# the grammar's own alphabet, plus separators, line terminators and a
+# non-ASCII digit
+_ISO_JUNK = "PTWDHMS0123456789.-x \n\r١"
+_DIGITS = st.from_regex(r"[0-9]{1,7}", fullmatch=True)
+_BIG_DIGITS = st.from_regex(r"[0-9]{1,22}", fullmatch=True)
+
+
+@st.composite
+def _iso_strings(draw):
+    """Grammar-shaped durations with any subset of components (empty
+    W/D/H groups, bare ``P``/``PT``, fractional and huge values)."""
+    digits = st.one_of(st.none(), _DIGITS, _BIG_DIGITS)
+    w, d, h, mi = (draw(digits) for _ in range(4))
+    sec = draw(st.one_of(
+        st.none(), _DIGITS,
+        st.tuples(_DIGITS, _DIGITS).map(".".join),
+    ))
+    has_t = draw(st.booleans()) or any(x is not None for x in (h, mi, sec))
+    out = "P" + "".join(
+        f"{x}{u}" for x, u in ((w, "W"), (d, "D")) if x is not None
+    )
+    if has_t:
+        out += "T" + "".join(
+            f"{x}{u}" for x, u in ((h, "H"), (mi, "M"), (sec, "S")) if x is not None
+        )
+    return out
+
+
+@settings(**{**_SETTINGS, "max_examples": 25})
+@given(
+    strings=st.lists(
+        st.one_of(
+            _iso_strings(),
+            # near misses: a grammar string with junk on either side
+            st.tuples(
+                st.sampled_from(["", " ", "x", "1"]),
+                _iso_strings(),
+                st.sampled_from(["", "\n", "\r\n", " ", "x", "S", "1S", "."]),
+            ).map("".join),
+            st.text(_ISO_JUNK, max_size=12),
+            st.none(),
+        ),
+        min_size=1, max_size=40,
+    ),
+)
+def test_iso_duration_equals_fullmatch_reference(spark, strings):
+    from youtube_podcast_data_pipeline_azure_spark.functions import iso8601_duration_seconds
+
+    df = spark.createDataFrame([(s,) for s in strings], "x string")
+    want = [_iso_seconds_reference(s) for s in strings]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = [
+                r.s for r in df.select(iso8601_duration_seconds("x").alias("s")).collect()
+            ]
+            assert got == want, ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

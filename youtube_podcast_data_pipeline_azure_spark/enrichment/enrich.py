@@ -86,10 +86,12 @@ def enrich_comments(
     """A11 + A13 — append (sentiment, sentiment_score, emotion, summary)
     to each comment row (reference gold_sentiment_comments.py:52-99).
     Empty text never reaches the classifier (:70-72)."""
-    # No forced repartition here: a pandas_udf pays a Python-worker
-    # startup per partition, which swamps small inputs; at scale the
-    # upstream layout (many scan splits) already provides parallelism,
-    # and a remote-LLM classifier is latency-bound per batch anyway.
+    # No repartition in either enrich_*: the UDF runs as wide as its
+    # input.  Video silver is spread at the silver edge
+    # (medallion.bronze_videos_to_silver), so gold videos read as many
+    # files as there are cores.  Comment silver stays single-split: a
+    # pandas_udf pays a Python-worker startup per partition, which
+    # swamps a few thousand rows (spreading them measured slower).
     udf = _make_udf(classifier or DeterministicClassifier(), "comment")
     enriched = silver_comments.where(
         F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > 0

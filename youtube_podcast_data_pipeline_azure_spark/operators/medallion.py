@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from youtube_podcast_data_pipeline_azure_spark.functions.durations import iso8601_duration_seconds
+from youtube_podcast_data_pipeline_azure_spark.operators.util import spread
 
 
 def explode_envelope(df: DataFrame, items_col: str = "items") -> DataFrame:
@@ -31,8 +32,17 @@ def bronze_videos_to_silver(bronze_items: DataFrame) -> DataFrame:
     ``safe_int`` (null on unparsable).  The engine additionally upgrades
     ``publishedAt`` to a real timestamp and derives ``duration_seconds``
     from the ISO-8601 duration string (SURVEY.md §1.2).
+
+    This edge is where the video path gets its parallelism: ``spread``
+    round-robins a bronze input of fewer than defaultParallelism/2
+    splits (one fixture or one daily blob) before the projection.  The
+    silver layer then lands as that many files, so the gold read, the
+    enrichment UDF, the gold write and the KPI scan run that wide too.
+    Multi-split bronze and streams pass through unchanged.  Comments
+    stay single-split (``bronze_comments_to_silver``): their layer is a
+    few thousand rows, and spreading it measured slower.
     """
-    return bronze_items.select(
+    return spread(bronze_items).select(
         F.col("id").alias("video_id"),
         F.col("snippet.title").alias("title"),
         F.to_timestamp(F.col("snippet.publishedAt")).alias("published_at"),

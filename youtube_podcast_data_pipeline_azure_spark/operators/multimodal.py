@@ -260,6 +260,10 @@ def ahash_images(df: DataFrame, grid: int = 4) -> DataFrame:
                             for b, nb in zip(blk.reshape(-1), n_blk.reshape(-1))
                         ]
                     ).reshape(blk.shape)
+                # a block holding no pixels (h or w < grid) is never
+                # set: reduceat returns one pixel for a repeated start
+                # index where the empty sum is 0
+                bits &= n_blk > 0
                 sig = int(
                     np.dot(
                         bits.reshape(-1).astype(np.int64),
