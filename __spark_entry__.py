@@ -625,16 +625,14 @@ def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_duplicate_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al. 2014, operators/graph.py:connected_components_star)
-    over the SAME exact n-gram-Jaccard pair graph as
-    duplicate_clusters: O(log² n) rounds regardless of graph diameter —
-    the engine duplicate_clusters falls back to when label propagation
-    hits its iteration cap.  Shares duplicate_clusters' recursive-CTE
-    oracle; the two algorithms must hash-match exactly."""
+    """The same large-star/small-star engine as duplicate_clusters, run
+    over the same exact n-gram-Jaccard pair graph.  Both names call
+    dedup.duplicate_clusters (Kiveris et al. 2014); this one is kept so
+    workloads and the oracle window that cite it stay valid, and shares
+    duplicate_clusters' recursive-CTE oracle."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs)
-    return graph.connected_components_star(docs, pairs)
+    return dedup.duplicate_clusters(docs, pairs)
 
 
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3189,9 +3187,9 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact n-gram-Jaccard near-dup
     graph: every document assigned a duplicate-cluster id (min reachable
-    doc id) via iterative min-label propagation — the step that turns
-    pair lists into keep-one-per-cluster dedup decisions.  Oracle is a
-    recursive CTE over the same pair list."""
+    doc id) via large-star/small-star — the step that turns pair lists
+    into keep-one-per-cluster dedup decisions.  Oracle is a recursive
+    CTE over the same pair list."""
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs)
     return dedup.duplicate_clusters(docs, pairs)
@@ -6383,9 +6381,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN docs db ON db.doc_id = id_b
             WHERE jaccard >= 0.5
     """
-    # Shared by duplicate_clusters (min-label propagation) and
-    # duplicate_clusters_star (large-star/small-star) — one contract,
-    # two engines, both must hash-match this recursive CTE.
+    # Shared by duplicate_clusters and duplicate_clusters_star, two
+    # registered names for the one large-star/small-star engine.
     duplicate_clusters_sql = f"""
             WITH RECURSIVE pairs AS ({ngram_pairs}),
             edges AS (

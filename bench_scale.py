@@ -831,15 +831,14 @@ def main() -> None:
         }
 
         # pathological graph: a pure chain — diameter = n, the case
-        # where iteration-capped label propagation silently mislabels
-        # (duplicate_clusters' fallback trigger, fixed r5).  Per-round
-        # star-CC cost is O(|E|) and rounds are O(log² n), independent
-        # of diameter, so 5x the chain must grow wall-clock ~linearly
-        # in |E| (ratio <= growth_factor), NOT with the 5x-deeper
-        # diameter label propagation would need.  The single-component
-        # check doubles as the correctness probe for the fallback path.
-        from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-            connected_components_star,
+        # min-label propagation needs one round per hop for.
+        # duplicate_clusters' large-star/small-star rounds cost O(|E|)
+        # each and number O(log² n), independent of diameter, so 5x the
+        # chain must grow wall-clock ~linearly in |E| (ratio <=
+        # growth_factor).  The single-component check doubles as the
+        # correctness probe.
+        from youtube_podcast_data_pipeline_azure_spark.operators.dedup import (
+            duplicate_clusters,
         )
 
         def _chain_cc_seconds(n: int) -> float:
@@ -848,7 +847,7 @@ def main() -> None:
                 F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
             )
             t0 = time.perf_counter()
-            comp = connected_components_star(nodes, pairs)
+            comp = duplicate_clusters(nodes, pairs)
             ncomp = comp.select("component").distinct().count()
             dt = time.perf_counter() - t0
             assert ncomp == 1, f"chain CC wrong: {ncomp} components"
@@ -857,7 +856,7 @@ def main() -> None:
         base_n, scaled_n = 20_000, 100_000
         cb = _chain_cc_seconds(base_n)
         cs = _chain_cc_seconds(scaled_n)
-        experiments["chain_cc:connected_components_star"] = {
+        experiments["chain_cc:duplicate_clusters"] = {
             "growth": f"chain diameter {base_n} -> {scaled_n}",
             "growth_factor": scaled_n // base_n,
             "base_sec": round(cb, 3),

@@ -463,14 +463,20 @@ def test_pair_generators_leave_no_persistent_rdds(docs):
     dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
     assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before
 
+    def held():
+        # the cleaner only sees a pair once both Python and JVM GC ran
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
     for _ in range(3):
         result = dedup.minhash_lsh_pairs(docs)
         result.collect()
         del result
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(1.0)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= before + 2
+        deadline = time.monotonic() + 10.0
+        while held() > before + 2 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    assert held() <= before + 2
 
 
 def test_quantize_embeddings_report(spark):

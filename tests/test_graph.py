@@ -3,6 +3,9 @@ the cross-document repeated-span detector."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from youtube_podcast_data_pipeline_azure_spark.operators import dedup, graph
@@ -111,44 +114,75 @@ def test_cooccurrence_repeat_interactions_dont_multiply(spark):
     assert [(r["a"], r["b"]) for r in out] == [(1, 2)]
 
 
-def test_star_cc_equals_label_propagation_on_cliques_and_chains(spark):
-    from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
-    from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-        connected_components_star,
-    )
+def _union_find_components(nodes, edges):
+    """Brute-force connected components: sorted (node, min node id of
+    its component) for every node in ``nodes``."""
+    parent = {n: n for n in nodes}
 
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(parent.setdefault(a, a)), root(parent.setdefault(b, b))
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, root(n)) for n in nodes)
+
+
+def test_duplicate_clusters_equals_union_find_on_cliques_and_chains(spark):
+    # a clique, a pair, a triangle-with-tail, singletons implicit
+    edges = [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
     nodes = spark.createDataFrame([(i,) for i in range(1, 31)], "doc_id long")
-    pairs = spark.createDataFrame(
-        # a clique, a pair, a triangle-with-tail, singletons implicit
-        [(1, 2), (2, 3), (1, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
-        "id_a long, id_b long",
-    )
-    a = sorted(map(tuple, connected_components_star(nodes, pairs).collect()))
-    b = sorted(map(tuple, duplicate_clusters(nodes, pairs).collect()))
-    assert a == b
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = sorted(map(tuple, dedup.duplicate_clusters(nodes, pairs).collect()))
+    assert got == _union_find_components(range(1, 31), edges)
 
 
-def test_duplicate_clusters_long_chain_falls_back_to_star(spark):
-    """A graph whose diameter exceeds the label-propagation iteration
-    cap must still return CORRECT components (r5: the capped loop used
-    to split a 40-chain into 20 bogus components silently)."""
-    from youtube_podcast_data_pipeline_azure_spark.operators.dedup import duplicate_clusters
-
+def test_duplicate_clusters_long_chain_is_one_component(spark):
+    """A 40-chain has diameter 39; every node must still land in one
+    component (r5: an iteration-capped loop once split it into 20
+    bogus components silently)."""
     n = 40
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "doc_id long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
     )
-    comps = {r["component"] for r in duplicate_clusters(nodes, chain).collect()}
+    comps = {r["component"] for r in dedup.duplicate_clusters(nodes, chain).collect()}
     assert comps == {1}
 
 
-def test_star_cc_handles_empty_and_singletons(spark):
-    from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-        connected_components_star,
-    )
+def test_duplicate_clusters_shuffled_id_chain_is_one_component(spark):
+    """Diameter independence: a 1 000-node chain whose ids are shuffled
+    along the path.  Label propagation with pointer jumping
+    (comp := comp[comp]) needs hundreds of rounds here; large-star /
+    small-star needs O(log² n)."""
+    n = 1000
+    ids = list(range(1, n + 1))
+    random.Random(3).shuffle(ids)
+    nodes = spark.range(1, n + 1).select(F.col("id").alias("doc_id"))
+    chain = spark.createDataFrame(list(zip(ids, ids[1:])), "id_a long, id_b long")
+    got = dedup.duplicate_clusters(nodes, chain).groupBy("component").count().collect()
+    assert [(r["component"], r["count"]) for r in got] == [(1, n)]
 
+
+def test_duplicate_clusters_raises_past_round_cap(spark, monkeypatch):
+    """Past the round cap the engine raises instead of returning
+    partial labels.  A 3-node chain reaches its star forest in one
+    round; a 4-node chain needs two."""
+    monkeypatch.setattr(dedup, "_MAX_STAR_ROUNDS", 1)
+    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+    chain3 = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    got = sorted(map(tuple, dedup.duplicate_clusters(nodes, chain3).collect()))
+    assert got == [(1, 1), (2, 1), (3, 1), (4, 4)]
+    chain4 = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="star forest"):
+        dedup.duplicate_clusters(nodes, chain4)
+
+
+def test_star_cc_handles_empty_and_singletons(spark):
     nodes = spark.createDataFrame([(5,), (7,), (9,)], "doc_id long")
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    got = sorted(map(tuple, connected_components_star(nodes, empty).collect()))
+    got = sorted(map(tuple, dedup.duplicate_clusters(nodes, empty).collect()))
     assert got == [(5, 5), (7, 7), (9, 9)]

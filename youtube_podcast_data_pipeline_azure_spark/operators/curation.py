@@ -603,7 +603,7 @@ def leakage_safe_split(
 
     Composition: connected components over the supplied near-dup
     ``pairs`` graph (``dedup.duplicate_clusters`` — min-reachable-id
-    labels, star-CC fallback on pathological diameters), then the
+    labels, large-star/small-star on any diameter), then the
     content-hash split gate applied to the component id
     (``sampling.dataset_split``).  Stable under re-runs, retries,
     repartitioning, and appends, like every hash-gated sampler here.

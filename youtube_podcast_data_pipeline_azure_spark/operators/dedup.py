@@ -32,7 +32,8 @@ therefore: (1) :func:`exact_dedup` first — collapses exact/boilerplate
 clusters with a hash-groupBy whose shuffle carries 32-char digests,
 never bodies; (2) near-dup pair generation over the surviving
 representatives only; (3) :func:`duplicate_clusters` to fold pairs
-into keep-one decisions.  MinHash-LSH degrades most gracefully under
+into keep-one decisions (large-star/small-star connected components,
+diameter-independent).  MinHash-LSH degrades most gracefully under
 residual hot clusters (banded candidates, constant per-doc signature
 work) and is the default at scale; the PPJoin path is the lossless
 spot-check for bounded inputs.
@@ -42,7 +43,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from youtube_podcast_data_pipeline_azure_spark.functions.text import (
@@ -890,90 +891,103 @@ def containment_dedup(
 # Duplicate clusters (connected components over the near-dup pair graph)
 # ---------------------------------------------------------------------------
 
+#: Rounds after which :func:`duplicate_clusters` raises.  Large-star /
+#: small-star needs O(log² n) (14 on a 200k-node shuffled-id chain), so
+#: reaching this means a broken invariant, never a big graph.
+_MAX_STAR_ROUNDS = 64
+
+
+def _edge_rows(df: DataFrame, *uv: tuple[Column, Column]) -> DataFrame:
+    """One (u, v) row per given column pair per row of ``df``."""
+    rows = F.array(*(F.struct(u.alias("u"), v.alias("v")) for u, v in uv))
+    return df.select(F.explode(rows).alias("e")).select("e.u", "e.v")
+
+
+def _star_forest_state(edges: DataFrame) -> tuple[DataFrame, bool]:
+    """Deduplicate and localCheckpoint canonical edges (u > v) and
+    report whether they form a star forest: no source has two targets
+    and no target is a source.  That is exactly the large-star /
+    small-star fixpoint, each non-root pointing at its component
+    minimum.  The test rides on the checkpoint: a (v, NULL) row
+    marks each target, so after the one shuffle on u both conditions
+    are partition-local window counts, folded by an Observation."""
+    obs = Observation()
+    by_u = Window.partitionBy("u")
+    n_out = F.count("v").over(by_u)
+    bad = (n_out > 1) | ((n_out == 1) & (F.count("*").over(by_u) > 1))
+    state = (
+        _edge_rows(edges, (F.col("u"), F.col("v")), (F.col("v"), F.lit(None)))
+        .repartition("u")
+        .dropDuplicates(["u", "v"])
+        .select("u", "v", bad.alias("bad"))
+        .observe(obs, F.max("bad").alias("bad"))
+        .where(F.col("v").isNotNull())
+        .select("u", "v")
+        .localCheckpoint()
+    )
+    return state, not obs.get["bad"]
+
+
+def _star_round(edges: DataFrame) -> DataFrame:
+    """Large-star then small-star over canonical edges.  Large-star maps
+    each edge (u, v) to (u, m(v)), m(v) = min of v and its targets;
+    small-star has each source u, with m = min of its targets, emit
+    (u, m) and (v, m) for its other targets v."""
+    m = edges.groupBy("u").agg(F.min("v").alias("m"))
+    large = edges.join(m.withColumnRenamed("u", "v"), "v", "left").select(
+        "u", F.coalesce("m", "v").alias("v")
+    )
+    small = large.select(
+        "u", "v", F.min("v").over(Window.partitionBy("u")).alias("m")
+    )
+    return _edge_rows(
+        small, (F.col("v"), F.col("m")), (F.col("u"), F.col("m"))
+    ).where(F.col("u") != F.col("v"))
+
+
 def duplicate_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Assign every document to a duplicate cluster: connected
     components over the near-duplicate pair graph, component id = the
     minimum doc id reachable.  This is the step that turns pair lists
     (MinHash / SimHash / n-gram Jaccard output) into keep-one-per-
-    cluster dedup decisions.
+    cluster dedup decisions, and the engine's one connected-components
+    implementation.
 
-    Algorithm: iterative min-label propagation.  Each round, every node
-    takes the min of its own label and its neighbors' labels; a round is
-    one shuffle on the edge endpoints, and convergence takes
-    O(graph diameter) rounds — near-dup graphs are overwhelmingly tiny
-    cliques, so 2-3 rounds in practice.  Each round's labels are
-    localCheckpoint'ed: the plan stays O(1) deep instead of O(rounds)
-    (lineage blow-up is the classic iterative-algorithm failure mode on
-    Spark).  At 100 TB the same loop holds — state is one (id, label)
-    row per document and edges are never materialized driver-side.
-
-    If the loop does NOT converge within ``max_iterations`` (a graph
-    with diameter > max_iterations — long chains, not cliques), the
-    function falls back to
-    ``graph.connected_components_star`` (Kiveris et al. '14
-    large-star/small-star, O(log² n) rounds regardless of diameter)
-    rather than returning silently-wrong partial labels — caught live
-    in r5 by a 40-node chain, which the capped loop split into 20
-    bogus components.
+    Algorithm: alternating large-star / small-star (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond") over edges
+    kept canonical (u > v): O(log² n) rounds whatever the diameter —
+    near-dup graphs (tiny cliques) take one, a 200k-node chain 14,
+    where label propagation needs one per hop.  Each round is one
+    localCheckpoint'ed materialization (plan depth stays O(1)) that
+    carries its own convergence test; state is edges only, never
+    collected.  The loop never returns partial labels: past
+    :data:`_MAX_STAR_ROUNDS` it raises.
 
     Returns (id_col, component) for EVERY input document (singletons are
-    their own component).
+    their own component) as a checkpoint scan.
     """
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.persist()
-
-    labels = (
+    edges, forest = _star_forest_state(
+        pairs.where(F.col("id_a") != F.col("id_b")).select(
+            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
+        )
+    )
+    rounds = 0
+    while not forest:
+        if rounds == _MAX_STAR_ROUNDS:
+            raise RuntimeError(f"duplicate_clusters: no star forest after {rounds} rounds")
+        edges, forest = _star_forest_state(_star_round(edges))
+        rounds += 1
+    return (
         docs.select(F.col(id_col).alias("id"))
         .dropDuplicates(["id"])
-        .withColumn("comp", F.col("id"))
+        .join(edges.select(F.col("u").alias("id"), F.col("v").alias("comp")), "id", "left")
+        .select(F.col("id").alias(id_col), F.coalesce("comp", "id").alias("component"))
         .localCheckpoint()
     )
-    converged = False
-    for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        # diameter > max_iterations: partial labels would be WRONG, not
-        # merely stale — hand the graph to the diameter-independent
-        # star algorithm instead
-        from youtube_podcast_data_pipeline_azure_spark.operators.graph import (
-            connected_components_star,
-        )
-
-        return connected_components_star(docs, pairs, id_col=id_col)
-    return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component"))
 
 
 # ---------------------------------------------------------------------------
@@ -1810,10 +1824,9 @@ def component_size_report(
     is bridging unrelated documents — THE standing failure mode of
     web-scale dedup, worth one cheap report before deleting anything.
 
-    Components via :func:`duplicate_clusters` (min-label propagation
-    with the diameter-safe star fallback), then two aggregates —
-    component → size, size → (n_clusters, n_docs) — both map-side
-    partial, both over (id, label) rows only.
+    Components via :func:`duplicate_clusters` (large-star/small-star),
+    then two aggregates — component → size, size → (n_clusters,
+    n_docs) — both map-side partial, both over (id, label) rows only.
 
     Returns (cluster_size, n_clusters, n_docs), one row per occurring
     size.
